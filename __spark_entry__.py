@@ -2671,7 +2671,7 @@ def q_ann_ivfpq_topk(spark, sf_dir):
     # probe), and pq_train's Lloyd iterations are driver-collect jobs
     # that re-ran the normalize serially before the main action.
     # Interleaved A/B at sf0.1: 2.63/3.59 lazy -> 2.03/2.13 s
-    # (min/med). RECDB_MAT_STORAGE=none restores the lazy form.
+    # (min/med). storage="none" restores the lazy form.
     unit = materialize(
         similarity.unit_normalize(emb).withColumnRenamed("unit", "uv"))
     cent = similarity.first_k_centroids(unit, k=16, vec_col="uv")
@@ -2940,7 +2940,7 @@ def q_rec_popular_topk(spark, sf_dir):
     # 3 more consumer legs in the main job) — the overlap argument that
     # keeps the CF predict path lazy (§1 negative result) does not
     # apply. Interleaved A/B at sf0.1: 1.84/2.09 lazy -> 1.24/1.42 s
-    # (min/med, 1.49x). RECDB_MAT_STORAGE=none restores the lazy form.
+    # (min/med, 1.49x). storage="none" restores the lazy form.
     r = materialize(cf_ops.normalize_events(_ratings(spark, sf_dir),
                                             "userid", "itemid",
                                             "ratingval"))
@@ -2966,8 +2966,8 @@ def q_rec_baseline_topk(spark, sf_dir):
     # cut, the anti-join, users) PLUS the candidate-bound driver collect
     # that serializes the jobs anyway — same rationale as
     # q_rec_popular_topk above. Interleaved A/B at sf0.1: 2.13/2.33
-    # lazy -> 1.35/1.83 s (min/med). RECDB_MAT_STORAGE=none restores
-    # the lazy form.
+    # lazy -> 1.35/1.83 s (min/med). storage="none" restores the lazy
+    # form.
     r = materialize(cf_ops.normalize_events(_ratings(spark, sf_dir),
                                             "userid", "itemid",
                                             "ratingval"))

@@ -73,8 +73,12 @@ class RecCatalog:
     def _save_manifest(self) -> None:
         if not self.workdir:
             return
-        with open(self._manifest_path(), "w") as f:
+        # tmp + os.replace (event_store's discipline): a crash mid-dump
+        # must leave the previous manifest loadable
+        path = self._manifest_path()
+        with open(path + ".tmp", "w") as f:
             json.dump([asdict(i) for i in self._mem.values()], f, indent=1)
+        os.replace(path + ".tmp", path)
 
     # -- API -----------------------------------------------------------
     def get(self, name: Optional[str]) -> Optional[RecommenderInfo]:

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from recdb_postgresql_spark.catalog import RecCatalog, RecommenderInfo
-from recdb_postgresql_spark.functions.mat import materialize
+from recdb_postgresql_spark.functions import mat
 from recdb_postgresql_spark.operators import cf, svd as svd_mod
 
 METHODS = ("itemcoscf", "itempearcf", "usercoscf", "userpearcf", "svd")
@@ -60,15 +60,11 @@ def cluster_conf(events_tb: float = 100.0, executors: int = 1000,
     - broadcast threshold raised: the item dimension and CF models are
       far below 512MB and should never shuffle.
 
-    Alongside these confs, set ``RECDB_CF_MATERIALIZE=disk`` (env) on
-    a cluster: the on-the-fly RECOMMEND path then materializes the
-    full normalized-ratings frame (and the item-CF model) ONCE
-    instead of re-executing the events scan + aggregate per consumer
-    leg — at cluster data volumes one copy of that build saturates
-    the executors, so the local-mode overlap that makes the lazy
-    duplicated plan cheapest on the 32-core harness does not exist
-    (measured crossover: stress.py cf_share probe). The local default
-    stays ``none``.
+    Materialization needs no setting: ``functions.mat.policy`` shares
+    the on-the-fly RECOMMEND model build once the input reaches the
+    size where sharing won in STRESS.json (``localCheckpoint``), and
+    stores the dedup shingle frame ``DISK_ONLY`` past its own
+    threshold. No ``disk`` arm was measured for the CF build.
     """
     total_cores = executors * cores_per_executor
     by_size = int(events_tb * 1024 * 1024 / 200)   # 200MB shuffle blocks
@@ -212,60 +208,34 @@ class RecEngine:
             self.catalog.update_meta(info)
         else:
             # on-the-fly "GenerateRecommend" path: train at query time.
-            # The plan around the pair join stays lazy so the predict
-            # join pushes the user filter through symmetrize() into the
-            # e1 pair side (measured: caching the full user-CF model at
-            # sf0.1 made it 4x slower) — but every OTHER consumer of
-            # the normalized ratings (the e2 pair side, norms/means,
-            # neighbor ratings, the item dimension) reads them in FULL,
-            # and Catalyst re-executes the events scan + (user,item)
-            # aggregate once per such leg (8-21 scans per query at
-            # sf0.1). Whether de-duplicating those legs PAYS is purely
-            # a question of scale, so it is a policy knob
-            # (RECDB_CF_MATERIALIZE), not a hard-coded plan shape:
-            #
-            # - 'none' (default): fully lazy, duplicated subtrees. On
-            #   the harness box the duplicated stages overlap on
-            #   otherwise-idle cores and every materialization barrier
-            #   LOSES (interleaved A/B at sf0.1: item-CF lazy
-            #   1.3-1.7 s vs 1.9-2.7 s with any checkpoint combination
-            #   — the r12 §3 negative result extends to the model
-            #   subtree).
-            # - 'local'/'disk': one materialization of the full
-            #   ratings feeding exactly the unprunable legs, and for
-            #   the item-CF methods (whose whole model the user filter
-            #   can never reach — it is item-keyed) the trained model
-            #   too, which also stops symmetrize() from building it
-            #   twice. Once one copy of the build saturates the cores
-            #   the overlap argument dies and re-execution costs
-            #   ~linearly per leg: measured crossover at the x64
-            #   decade (stress.py cf_share probe, 4.7M ratings) —
-            #   user-CF 17.4 s lazy vs 12.9 s materialized (1.34x);
-            #   item-CF has not crossed yet at x64 (0.81x — its
-            #   amplified input still sits in page cache, so
-            #   re-scans stay nearly free), but at real cluster
-            #   volumes the 9-12 redundant cold scans of the events
-            #   table dominate. Hence cluster_conf recommends
-            #   'disk' off the harness box; the bench default stays
-            #   'none'.
-            #
-            # The prunable legs (user-WHERE side of the pair join,
-            # target users, per-user averages) stay lazy under EVERY
-            # policy so their parquet pushdown survives. Users wanting
-            # the model amortized ACROSS queries should
-            # create_recommender() — the reference's
-            # materialized/OP_FILTER regime (parse_rec.c:554-678).
-            policy = os.environ.get("RECDB_CF_MATERIALIZE", "none")
-            ratings_full = materialize(ratings, storage=policy)
-            if method in ("itemcoscf", "itempearcf"):
-                models = self._train_ratings(ratings_full, method)
-                models = {"model": materialize(models["model"],
-                                               storage=policy)}
-            elif method in ("usercoscf", "userpearcf"):
-                models = self._train_ratings(ratings, method,
-                                             ratings_full=ratings_full)
+            # The legs a user-WHERE can prune (the e1 pair side, target
+            # users, per-user averages) stay lazy so the predicate keeps
+            # pushing into the parquet scan (caching the whole user-CF
+            # model made sf0.1 4x slower). The unprunable legs (the e2
+            # pair side, norms, neighbor ratings, the item dimension,
+            # and for item-CF the whole item-keyed model) read the
+            # ratings in FULL; Catalyst re-runs the events scan +
+            # aggregate once per such leg. Sharing them loses on small
+            # inputs, where the duplicated stages overlap on idle cores,
+            # and wins once one build saturates the cores, so
+            # mat.policy decides by input size. SVD trains on the driver
+            # from one toPandas() and shares nothing. To amortize a
+            # model ACROSS queries, create_recommender() — the
+            # reference's OP_FILTER regime (parse_rec.c:554-678).
+            kind = {"itemcoscf": mat.ITEM_CF, "itempearcf": mat.ITEM_CF,
+                    "usercoscf": mat.USER_CF, "userpearcf": mat.USER_CF
+                    }.get(method)
+            if kind is None:
+                models = self._train_ratings(ratings, method)
             else:
-                models = self._train_ratings(ratings_full, method)
+                form = mat.policy(kind, mat.size_of(ratings))
+                ratings_full = mat.materialize(ratings, storage=form)
+                if kind == mat.ITEM_CF:
+                    model = self._train_ratings(ratings_full, method)["model"]
+                    models = {"model": mat.materialize(model, storage=form)}
+                else:
+                    models = self._train_ratings(ratings, method,
+                                                 ratings_full=ratings_full)
         rf = ratings_full if ratings_full is not None else ratings
         users = rf.select("user").distinct()
         if user_where is not None:
@@ -304,9 +274,10 @@ class RecEngine:
         for a materialized recommender. The reference creates the
         RecView at CREATE time but its read path is gated off
         (execRecommend.c:935-940); here it is a working option:
-        ``recommend(..., name=n, use_view=True)`` becomes a pure
-        filter + top-k over the stored table — the right trade when
-        queries vastly outnumber model refreshes.
+        ``recommend_from_view(n, ...)``, and RecSQL's IndexRecommend
+        auto-route once a view exists, read a pure filter + top-k over
+        the stored table — the right trade when queries vastly
+        outnumber model refreshes.
 
         Scale contract: the stored view is capped to the top ``k``
         predictions PER USER (``k`` defaults from the engine's

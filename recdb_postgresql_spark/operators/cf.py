@@ -383,7 +383,7 @@ def item_cooccurrence(ratings: DataFrame, min_support: int = 2,
     # it once so the corpus distinct — a full shuffle at scale — runs
     # once, not per leg (r13 sweep; interleaved A/B at sf0.1: med
     # 1.54 -> 1.37 s, and the win is scale-bound like every shared
-    # frame here. RECDB_MAT_STORAGE=none restores the lazy plan).
+    # frame here. storage="none" restores the lazy plan).
     baskets = materialize(ratings.select("user", "item").distinct())
     totals = baskets.agg(
         F.count_distinct(F.col("user")).cast("double").alias("n_users"))

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from recdb_postgresql_spark.functions.hashing import md5_long, seeded_hash
 from recdb_postgresql_spark.functions.layout import spread_small
-from recdb_postgresql_spark.functions.mat import materialize
+from recdb_postgresql_spark.functions.mat import SHINGLES, materialize
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
@@ -548,9 +548,9 @@ def lsh_verified_pairs(shingled: DataFrame | None, threshold: float = 0.5,
     candidate-only true-Jaccard verify, sharing ONE md5 pass.
 
     ``checkpoint`` materializes the (id, shingle-hash) table once
-    (localCheckpoint) so the signature and verify legs both read it
-    instead of re-hashing — without it Catalyst re-runs the md5 scan
-    per leg. The checkpointed table is two longs per shingle, orders of
+    (localCheckpoint; DISK_ONLY from ``mat.SHINGLES_BYTES`` up) so the
+    signature and verify legs both read it instead of re-hashing —
+    without it Catalyst re-runs the md5 scan per leg. The checkpointed table is two longs per shingle, orders of
     magnitude smaller than the documents themselves.
 
     ``hashed`` (from ``hash_shingles``, ideally already checkpointed)
@@ -562,7 +562,7 @@ def lsh_verified_pairs(shingled: DataFrame | None, threshold: float = 0.5,
     if hashed is None:
         hashed = hash_shingles(shingled, hash_fn)
         if checkpoint:
-            hashed = materialize(hashed)
+            hashed = materialize(hashed, kind=SHINGLES)
     sig = minhash_from_hashes(hashed, num_hashes=num_hashes)
     cands = lsh_candidate_pairs(sig, bands=bands, rows_per_band=rows_per_band)
     return jaccard_pairs(None, threshold, candidates=cands, hashed=hashed)

@@ -459,4 +459,8 @@ class RecSQL:
                     + m["from"][ev.end:])
         rest = re.sub(r"\bILIKE\b", "ilike", m["rest"] or "", flags=re.IGNORECASE)
         plain = f"SELECT {m['select']} FROM {new_from}{rest}"
-        return self.spark.sql(plain)
+        # spark.sql analyzes eagerly, so the view can go at once; kept,
+        # it would hold every past statement's plan for the session
+        out = self.spark.sql(plain)
+        self.spark.catalog.dropTempView(view)
+        return out

@@ -28,10 +28,6 @@ def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 32,
     w.format("parquet").saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def write_sorted(df: DataFrame, path: str, partition_col: str,
                  sort_col: str) -> None:
     (df.repartition(partition_col)

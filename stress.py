@@ -14,15 +14,18 @@ Run: python stress.py [multiplier ...]
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import json
 import os
 import sys
+import tempfile
 import time
 
 from pyspark.sql import functions as F
 
 from recdb_postgresql_spark.engine import get_spark
+from recdb_postgresql_spark.functions import mat
 from recdb_postgresql_spark.operators import cf
 from recdb_postgresql_spark.sources.readers import load_table, ratings_from_events
 
@@ -50,6 +53,19 @@ def record(probe: str, **fields) -> None:
         json.dump(RESULTS, f, indent=1)
     msg = " ".join(f"{k}={v}" for k, v in RESULTS[probe].items())
     print(f"{probe}: {msg}", flush=True)
+
+
+@contextlib.contextmanager
+def forced_policy(form: str):
+    """Force every ``mat.policy`` decision to ``form``; ``auto`` keeps
+    the program's own size-aware policy (its default)."""
+    own = mat.policy
+    if form != "auto":
+        mat.policy = lambda kind, size: form
+    try:
+        yield
+    finally:
+        mat.policy = own
 
 
 def amplified_ratings(spark, sf_dir: str, mult: int):
@@ -359,7 +375,7 @@ def theilsen_grouped_probe(spark, n_groups: int = 64,
 
 def main():
     if sys.argv[1:2] == ["cfshare"]:
-        # RECDB_CF_MATERIALIZE crossover rows (merge into STRESS.json)
+        # on-the-fly CF sharing crossover rows (merge into STRESS.json)
         os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
         spark = get_spark("recdb_stress")
         spark.sparkContext.setLogLevel("ERROR")
@@ -481,55 +497,53 @@ def cf_probe(spark, sf_dir: str, mult: int) -> None:
            capped_user_pairs=n_user, user_train_capped_s=t_user)
 
 
-def cf_share_probe(spark, sf_dir: str, mult: int, reps: int = 2) -> None:
-    """RECDB_CF_MATERIALIZE policy crossover (r12 verdict next #1):
-    the on-the-fly RECOMMEND plan consumes the normalized ratings
-    8-21x; at sf0.1 the duplicated stages overlap on idle cores and
-    every materialization barrier LOSES (measured, engine.recommend
-    comment), but that overlap argument dies once one copy of the
-    build saturates the cores. This probe measures BOTH policies on
-    the identical amplified corpus (users grow with mult, pinned to a
-    real parquet table first — a pipeline reads a table, and the
-    lazy policy must re-scan a table, not re-run the generator),
-    interleaved A/B so machine weather hits both arms equally. The
-    row is the evidence behind cluster_conf's recommendation to set
-    RECDB_CF_MATERIALIZE=disk off the harness box."""
+def cf_share_probe(spark, sf_dir: str, mult: int, reps: int = 3) -> None:
+    """On-the-fly RECOMMEND sharing crossover: the plan consumes the
+    normalized ratings 8-21x; on small inputs the duplicated stages
+    overlap on idle cores and every materialization barrier LOSES,
+    but that overlap argument dies once one copy of the build
+    saturates the cores. This probe times the lazy arm (``none``),
+    the shared arm (``local``) and the program's size-aware default
+    (``auto``) on the identical amplified corpus (users grow with
+    mult, pinned to a real parquet table first — a pipeline reads a
+    table, and the lazy arm must re-scan a table, not re-run the
+    generator), interleaved so machine weather hits every arm
+    equally. ``*_spread_s`` is max - min over the reps."""
     from recdb_postgresql_spark.engine import RecEngine
 
-    path = f"/tmp/cf_share_events_x{mult}.parquet"
+    path = os.path.join(tempfile.gettempdir(),
+                        f"cf_share_events_x{mult}.parquet")
     amplified_ratings(spark, sf_dir, mult).write.mode(
         "overwrite").parquet(path)
     ev = spark.read.parquet(path)  # (user, item, rating)
     n = ev.count()
+    size = mat.size_of(cf.normalize_events(ev, "user", "item", "rating"))
     eng = RecEngine(spark, verbose_queries=False)
-    out: dict[str, dict[str, list]] = {
-        m: {p: [] for p in ("none", "local")}
-        for m in ("itemcoscf", "usercoscf")}
-    prev = os.environ.get("RECDB_CF_MATERIALIZE")
-    try:
-        for _ in range(reps):
-            for method in ("itemcoscf", "usercoscf"):
-                for policy in ("none", "local"):
-                    os.environ["RECDB_CF_MATERIALIZE"] = policy
+    arms = ("none", "local", "auto")
+    methods = {"itemcos": ("itemcoscf", mat.ITEM_CF),
+               "usercos": ("usercoscf", mat.USER_CF)}
+    out = {m: {a: [] for a in arms} for m in methods}
+    for _ in range(reps):
+        for m, (method, _kind) in methods.items():
+            for arm in arms:
+                with forced_policy(arm):
                     t0 = time.perf_counter()
                     eng.recommend(ev, "user", "item", "rating", method,
                                   user_where=F.col("user") < 20, k=50,
                                   round_to=6).count()
-                    out[method][policy].append(time.perf_counter() - t0)
-    finally:
-        if prev is None:
-            os.environ.pop("RECDB_CF_MATERIALIZE", None)
-        else:
-            os.environ["RECDB_CF_MATERIALIZE"] = prev
-    record(f"cf_share_x{mult}", mult=mult, ratings=n,
-           itemcos_lazy_s=min(out["itemcoscf"]["none"]),
-           itemcos_mat_s=min(out["itemcoscf"]["local"]),
-           itemcos_mat_speedup_x=round(min(out["itemcoscf"]["none"])
-                                       / min(out["itemcoscf"]["local"]), 2),
-           usercos_lazy_s=min(out["usercoscf"]["none"]),
-           usercos_mat_s=min(out["usercoscf"]["local"]),
-           usercos_mat_speedup_x=round(min(out["usercoscf"]["none"])
-                                       / min(out["usercoscf"]["local"]), 2))
+                    out[m][arm].append(time.perf_counter() - t0)
+    row = dict(mult=mult, ratings=n, source_bytes=size, reps=reps,
+               cpus=spark.sparkContext.defaultParallelism)
+    for m, (_method, kind) in methods.items():
+        best = {a: min(ts) for a, ts in out[m].items()}
+        row[f"{m}_auto_form"] = mat.policy(kind, size)
+        for a in arms:
+            row[f"{m}_{a}_s"] = best[a]
+            row[f"{m}_{a}_spread_s"] = max(out[m][a]) - best[a]
+        row[f"{m}_mat_speedup_x"] = round(best["none"] / best["local"], 2)
+        row[f"{m}_auto_vs_best_x"] = round(best["auto"] / min(best.values()),
+                                           2)
+    record(f"cf_share_x{mult}", **row)
 
 
 def graph_iter_decade_probe(spark, mult: int = 64,
@@ -573,38 +587,28 @@ def matpolicy_probe(spark, sf_dir: str, mult: int = 64,
     (id,sh) shingle-hash table, the (doc,term,tf) table) now route
     through materialize(); this measures localCheckpoint vs
     persist(DISK_ONLY) head-to-head at the x``mult`` decade on one
-    dedup and one tfidf entry shape, interleaved A/B, so the
-    documented default is evidence-based. ('local' stays the
-    single-box default either way — 'disk' exists for cluster
-    fault-tolerance and block-manager pressure, and this row bounds
-    what that insurance costs.)"""
+    dedup and one tfidf entry shape, interleaved with the program's
+    size-aware default (``auto``), so each mat.policy threshold is
+    evidence-based."""
     from recdb_postgresql_spark.operators import dedup, text
 
     docs = amplified_docs(spark, sf_dir, mult).localCheckpoint()
     n_docs = docs.count()
-    out = {p: {"dedup": [], "tfidf": []} for p in ("local", "disk")}
-    prev = os.environ.get("RECDB_MAT_STORAGE")
-    try:
-        for _ in range(reps):
-            for policy in ("local", "disk"):
-                os.environ["RECDB_MAT_STORAGE"] = policy
+    arms = ("local", "disk", "auto")
+    out = {a: {"dedup": [], "tfidf": []} for a in arms}
+    for _ in range(reps):
+        for arm in arms:
+            with forced_policy(arm):
                 sh = dedup.word_shingles(docs)
                 t0 = time.perf_counter()
                 dedup.lsh_verified_pairs(sh, threshold=0.5).count()
-                out[policy]["dedup"].append(time.perf_counter() - t0)
+                out[arm]["dedup"].append(time.perf_counter() - t0)
                 t0 = time.perf_counter()
                 text.tfidf_top_terms(docs, k=5).count()
-                out[policy]["tfidf"].append(time.perf_counter() - t0)
-    finally:
-        if prev is None:
-            os.environ.pop("RECDB_MAT_STORAGE", None)
-        else:
-            os.environ["RECDB_MAT_STORAGE"] = prev
+                out[arm]["tfidf"].append(time.perf_counter() - t0)
     record(f"mat_policy_x{mult}", mult=mult, docs=n_docs,
-           dedup_local_s=min(out["local"]["dedup"]),
-           dedup_disk_s=min(out["disk"]["dedup"]),
-           tfidf_local_s=min(out["local"]["tfidf"]),
-           tfidf_disk_s=min(out["disk"]["tfidf"]))
+           **{f"{shape}_{arm}_s": min(out[arm][shape])
+              for shape in ("dedup", "tfidf") for arm in arms})
 
 
 def matpolicy2_probe(spark, sf_dir: str, mult: int = 64,
@@ -637,12 +641,10 @@ def matpolicy2_probe(spark, sf_dir: str, mult: int = 64,
     evx = evx.localCheckpoint()
     n_ev = evx.count()
 
-    from recdb_postgresql_spark.functions.mat import materialize
-
-    def kmv_exact(policy):
-        du = materialize(evx.select(F.col("event_type").alias("g"),
-                                    F.col("user_id").alias("u"))
-                         .distinct(), storage=policy)
+    def kmv_exact():
+        du = mat.materialize(evx.select(F.col("event_type").alias("g"),
+                                        F.col("user_id").alias("u"))
+                             .distinct())
         sizes = du.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
         inter = (du.alias("a").join(du.alias("b"),
                                     (F.col("a.u") == F.col("b.u"))
@@ -655,30 +657,22 @@ def matpolicy2_probe(spark, sf_dir: str, mult: int = 64,
                 .join(sizes.withColumnRenamed("g", "grp2")
                       .withColumnRenamed("n", "n2"), "grp2"))
 
-    out = {p: {"ivf": [], "kmv": []} for p in ("local", "disk")}
-    prev = os.environ.get("RECDB_MAT_STORAGE")
-    try:
-        for _ in range(reps):
-            for policy in ("local", "disk"):
-                os.environ["RECDB_MAT_STORAGE"] = policy
+    arms = ("local", "disk", "auto")
+    out = {a: {"ivf": [], "kmv": []} for a in arms}
+    for _ in range(reps):
+        for arm in arms:
+            with forced_policy(arm):
                 t0 = time.perf_counter()
                 dedup.embedding_near_duplicates_ivf(
                     emb, cents, threshold=0.95).count()
-                out[policy]["ivf"].append(time.perf_counter() - t0)
+                out[arm]["ivf"].append(time.perf_counter() - t0)
                 t0 = time.perf_counter()
-                kmv_exact(policy).count()
-                out[policy]["kmv"].append(time.perf_counter() - t0)
-                spark.catalog.clearCache()
-    finally:
-        if prev is None:
-            os.environ.pop("RECDB_MAT_STORAGE", None)
-        else:
-            os.environ["RECDB_MAT_STORAGE"] = prev
+                kmv_exact().count()
+                out[arm]["kmv"].append(time.perf_counter() - t0)
+            spark.catalog.clearCache()
     record(f"mat_policy2_x{mult}", mult=mult, vectors=n_emb, events=n_ev,
-           ivf_local_s=min(out["local"]["ivf"]),
-           ivf_disk_s=min(out["disk"]["ivf"]),
-           kmv_local_s=min(out["local"]["kmv"]),
-           kmv_disk_s=min(out["disk"]["kmv"]))
+           **{f"{shape}_{arm}_s": min(out[arm][shape])
+              for shape in ("ivf", "kmv") for arm in arms})
 
 
 def cpuscale_probe(spark, sf_dir: str, mult: int = 16) -> None:

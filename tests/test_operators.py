@@ -144,6 +144,43 @@ def test_catalog_workdir_roundtrip(spark, tmp_path):
     assert out.count() == 2
 
 
+def test_catalog_manifest_survives_crash_mid_dump(spark, tmp_path,
+                                                  monkeypatch):
+    """A crash inside the manifest dump leaves the previous catalog
+    loadable and serving the same rows."""
+    import json
+
+    from recdb_postgresql_spark import catalog as catalog_mod
+
+    rows = [(1, 10, 4.0), (2, 10, 3.0), (1, 20, 5.0), (2, 20, 2.0),
+            (3, 30, 1.0)]
+    events = spark.createDataFrame(rows, "userid long, itemid long, ratingval double")
+    eng = RecEngine(spark, workdir=str(tmp_path))
+    eng.create_recommender("p1", events, "userid", "itemid", "ratingval", "itemcoscf")
+
+    def serve(engine):
+        return sorted(tuple(r) for r in engine.recommend(
+            events, "userid", "itemid", "ratingval", name="p1",
+            round_to=6).collect())
+
+    before = serve(RecEngine(spark, workdir=str(tmp_path)))
+
+    def crash(obj, f, **kw):
+        f.write(json.dumps(obj)[:20])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(catalog_mod.json, "dump", crash)
+    with pytest.raises(OSError):
+        eng.create_recommender("p2", events, "userid", "itemid",
+                               "ratingval", "usercoscf")
+    monkeypatch.undo()
+    survivor = RecEngine(spark, workdir=str(tmp_path))
+    assert survivor.catalog.get("p1") is not None
+    assert survivor.catalog.get("p2") is None
+    assert serve(survivor) == before
+    assert len(before) > 0
+
+
 def test_ivf_multiprobe_improves_recall(spark):
     """nprobe is the IVF recall knob: top-k hits vs brute force must
     not decrease with nprobe=2, and multi-probe candidates strictly

@@ -1,21 +1,23 @@
-"""r13 optimization round: new knobs must be value-identical.
+"""Shared-frame materialization must be value-identical.
 
-- RECDB_CF_MATERIALIZE flips the on-the-fly RECOMMEND plan between
-  the lazy duplicated-subtree form (local default) and the shared
-  materialized form (cluster policy) — same rows under every policy.
-- materialize() is the storage-policy helper behind it.
+- mat.policy flips the on-the-fly RECOMMEND plan between the lazy
+  duplicated-subtree form and the shared materialized form — same
+  rows under every form it can pick, and under its own choice (auto).
+- materialize() is the storage helper behind it.
 - cms_build(weight_col=) drops NULL/non-positive weights so the
   raw == pre-aggregated identity holds on arbitrary inputs.
 """
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from recdb_postgresql_spark.engine import RecEngine
+from recdb_postgresql_spark.functions import mat
 from recdb_postgresql_spark.functions.mat import materialize
 from recdb_postgresql_spark.functions.sketch import cms_build
+
+FORMS = ("none", "local", "disk", "auto")
+AUTO = mat.policy
 
 
 def _rows(df):
@@ -29,32 +31,33 @@ def events(spark):
     return spark.createDataFrame(data, "userid long, itemid long, val double")
 
 
-@pytest.fixture()
-def _restore_policy():
-    prev = os.environ.get("RECDB_CF_MATERIALIZE")
-    yield
-    if prev is None:
-        os.environ.pop("RECDB_CF_MATERIALIZE", None)
-    else:
-        os.environ["RECDB_CF_MATERIALIZE"] = prev
+def _forcing(monkeypatch, form):
+    """Make every policy() decision return ``form``; "auto" is the
+    program's own policy."""
+    monkeypatch.setattr(mat, "policy",
+                        AUTO if form == "auto" else lambda kind, size: form)
+
+
+def _same_under_every_form(out):
+    assert out["none"] == out["local"] == out["disk"] == out["auto"]
+    assert len(out["none"]) > 0
 
 
 @pytest.mark.parametrize("method", ["itemcoscf", "itempearcf",
                                     "usercoscf", "userpearcf"])
 def test_cf_materialize_policy_identical(spark, events, method,
-                                         _restore_policy):
+                                         monkeypatch):
     """recommend() rows are identical under every materialization
-    policy — the knob changes WHERE shared frames are stored, never
+    form — the policy changes WHERE shared frames are stored, never
     what any leg computes."""
     out = {}
-    for policy in ("none", "local", "disk"):
-        os.environ["RECDB_CF_MATERIALIZE"] = policy
+    for form in FORMS:
+        _forcing(monkeypatch, form)
         eng = RecEngine(spark, verbose_queries=False)
         df = eng.recommend(events, "userid", "itemid", "val", method,
                            user_where=F.col("userid") < 4, round_to=6)
-        out[policy] = _rows(df)
-    assert out["none"] == out["local"] == out["disk"]
-    assert len(out["none"]) > 0
+        out[form] = _rows(df)
+    _same_under_every_form(out)
 
 
 def test_materialize_modes(spark):
@@ -80,17 +83,7 @@ def test_cms_build_weight_guard(spark):
     assert _rows(pre) == _rows(raw)
 
 
-@pytest.fixture()
-def _restore_mat_storage():
-    prev = os.environ.get("RECDB_MAT_STORAGE")
-    yield
-    if prev is None:
-        os.environ.pop("RECDB_MAT_STORAGE", None)
-    else:
-        os.environ["RECDB_MAT_STORAGE"] = prev
-
-
-def test_textrank_toks_share_policy_identical(spark, _restore_mat_storage):
+def test_textrank_toks_share_policy_identical(spark, monkeypatch):
     """textrank_keywords' materialized token-position table (one pass
     instead of 2*window duplicated regexp+posexplode legs) is value-
     neutral under every storage policy, tie-breaks included."""
@@ -102,18 +95,17 @@ def test_textrank_toks_share_policy_identical(spark, _restore_mat_storage):
          for i in range(12)],
         "doc_id long, text string")
     out = {}
-    for policy in ("none", "local", "disk"):
-        os.environ["RECDB_MAT_STORAGE"] = policy
-        out[policy] = [tuple(r) for r in
-                       textrank_keywords(docs, window=2, iterations=4,
-                                         k=10).collect()]
-    assert out["none"] == out["local"] == out["disk"]
-    assert len(out["none"]) > 0
+    for form in FORMS:
+        _forcing(monkeypatch, form)
+        out[form] = [tuple(r) for r in
+                     textrank_keywords(docs, window=2, iterations=4,
+                                       k=10).collect()]
+    _same_under_every_form(out)
 
 
 @pytest.mark.parametrize("entry", ["rec_baseline_topk", "rec_popular_topk",
                                    "ann_ivfpq_topk", "rec_item_cooccur"])
-def test_entry_mat_policy_identical(spark, entry, _restore_mat_storage):
+def test_entry_mat_policy_identical(spark, entry, monkeypatch):
     """The r13-sweep entries whose shared input frame (normalized
     ratings / unit vectors) is materialized once for their
     driver-collect-serialized consumer legs return identical rows
@@ -122,10 +114,9 @@ def test_entry_mat_policy_identical(spark, entry, _restore_mat_storage):
 
     fn = entrymod.queries()[entry]
     out = {}
-    for policy in ("none", "local", "disk"):
-        os.environ["RECDB_MAT_STORAGE"] = policy
-        out[policy] = sorted(tuple(r) for r in
-                             fn(spark, "/root/testdata/sf0.001").collect())
+    for form in FORMS:
+        _forcing(monkeypatch, form)
+        out[form] = sorted(tuple(r) for r in
+                           fn(spark, "/root/testdata/sf0.001").collect())
         spark.catalog.clearCache()
-    assert out["none"] == out["local"] == out["disk"]
-    assert len(out["none"]) > 0
+    _same_under_every_form(out)

@@ -34,6 +34,9 @@ def test_recommend_grammar_end_to_end(rs):
     assert all(r.userid == 2 for r in rows)
     scores = [r.ratingval for r in rows]
     assert scores == sorted(scores, reverse=True)
+    # the per-statement scored view is dropped once the plan is built
+    assert not [t.name for t in rs.spark.catalog.listTables()
+                if t.name.startswith("__rec_scored_")]
 
 
 def test_auto_resolution_uses_materialized(rs):
