@@ -5,6 +5,16 @@ global ``RecModelsCatalogue`` table plus a per-recommender ``<name>Index``
 metadata table. Here the catalog is a JSON manifest (driver-side, tiny)
 and each model is a parquet directory (or a cached DataFrame when no
 workdir is configured).
+
+Model tables stay resident between statements, as the reference's
+heap tables stay open through the relcache: the catalog keeps one
+resolved ``spark.read.parquet`` handle per (recommender, table), so a
+warm read lists no files and runs no schema-inference job. A handle is
+a lazy plan bound to one file listing, never data. It is reused only
+while the table directory's ``(st_ino, st_mtime_ns)`` is unchanged;
+``put``, ``add_model_table`` and ``drop`` forget the handles they
+replace, and the stat check catches a write made through another
+catalog on the same workdir.
 """
 
 from __future__ import annotations
@@ -55,6 +65,9 @@ class RecCatalog:
         self.workdir = workdir
         self._mem: dict[str, RecommenderInfo] = {}
         self._mem_models: dict[str, dict[str, DataFrame]] = {}
+        # workdir mode: recommender -> table -> (directory stat
+        # signature, parquet handle); see the module docstring
+        self._handles: dict[str, dict[str, tuple[tuple[int, int], DataFrame]]] = {}
         if workdir:
             os.makedirs(workdir, exist_ok=True)
             self._load_manifest()
@@ -101,6 +114,7 @@ class RecCatalog:
             raise ValueError(f"recommender {info.name!r} exists")
         info.model_tables = sorted(models.keys())
         if self.workdir:
+            self._handles.pop(info.name, None)
             for key, df in models.items():
                 path = os.path.join(self.workdir, info.name, key)
                 df.write.mode("overwrite").parquet(path)
@@ -119,20 +133,43 @@ class RecCatalog:
         when the new table's plan lazily reads the existing parquet
         (overwriting a file you are reading truncates it mid-scan)."""
         if self.workdir:
+            self._handles.get(info.name, {}).pop(key, None)
             df.write.mode("overwrite").parquet(
                 os.path.join(self.workdir, info.name, key))
         else:
+            # unpersist before caching: a new plan equal to the old one
+            # would otherwise share its cache entry and lose it here
+            old = self._mem_models[info.name].get(key)
+            if old is not None:
+                old.unpersist()
             self._mem_models[info.name][key] = df.cache()
         if key not in info.model_tables:
             info.model_tables = sorted({*info.model_tables, key})
         self._mem[info.name] = info
         self._save_manifest()
 
-    def load_models(self, info: RecommenderInfo, spark: SparkSession) -> dict[str, DataFrame]:
+    def load_models(self, info: RecommenderInfo, spark: SparkSession,
+                    keys: Optional[list[str]] = None) -> dict[str, DataFrame]:
+        """The model tables ``keys`` of ``info`` (default: all of them)."""
+        keys = info.model_tables if keys is None else keys
         if self.workdir:
-            return {k: spark.read.parquet(os.path.join(self.workdir, info.name, k))
-                    for k in info.model_tables}
-        return self._mem_models[info.name]
+            return {k: self._handle(info.name, k, spark) for k in keys}
+        return {k: self._mem_models[info.name][k] for k in keys}
+
+    def _handle(self, name: str, key: str, spark: SparkSession) -> DataFrame:
+        path = os.path.join(self.workdir, name, key)
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
+            return spark.read.parquet(path)  # raises Spark's missing-path error
+        # stat BEFORE reading: a write racing the read then leaves a
+        # handle newer than its signature, which the next call re-reads
+        sig = (st.st_ino, st.st_mtime_ns)
+        tables = self._handles.setdefault(name, {})
+        cached = tables.get(key)
+        if cached is None or cached[0] != sig:
+            cached = tables[key] = (sig, spark.read.parquet(path))
+        return cached[1]
 
     def update_meta(self, info: RecommenderInfo) -> None:
         self._mem[info.name] = info
@@ -142,10 +179,11 @@ class RecCatalog:
         if name not in self._mem:
             raise ValueError(f"no recommender {name!r}")  # utility.c:978-983 analog
         self._mem.pop(name)
-        for df_map in (self._mem_models.pop(name, None),):
-            if df_map:
-                for df in df_map.values():
-                    df.unpersist()
+        self._handles.pop(name, None)
+        df_map = self._mem_models.pop(name, None)
+        if df_map:
+            for df in df_map.values():
+                df.unpersist()
         if self.workdir:
             shutil.rmtree(os.path.join(self.workdir, name), ignore_errors=True)
         self._save_manifest()

@@ -431,7 +431,7 @@ class RecSQL:
             # RecView is materialized AND the statement is provably
             # answerable from the capped view, substitute the stored
             # predictions instead of re-scoring. Exactness argument in
-            # _view_route_exact.
+            # _try_view_route.
             scored = self._try_view_route(m, hit, ev, ucol, icol, ecol)
         if scored is not None:
             self.last_strategy = "IndexRecommend"
